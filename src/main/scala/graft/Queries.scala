@@ -18,8 +18,8 @@ object Queries {
   // ---------------------------------------------------------------- entry
 
   /** Flagship: full Readability span extraction over a deterministic
-    * synthetic interleaved corpus (salted repartition → typed
-    * mapPartitions → per-doc span sequences).
+    * synthetic interleaved corpus (one map-only pass over the scan with
+    * the oversize gate → per-doc span sequences).
     */
   def extractDocuments(spark: SparkSession, sfDir: String): DataFrame =
     x1_extract(spark, sfDir)
@@ -29,17 +29,37 @@ object Queries {
     else if (sfDir.contains("0.01")) 400L
     else 2000L
 
-  /** Session-scoped cache of the extracted corpus: x1/x2/m1 all consume
-    * the extraction OUTPUT table — in production they read the committed
-    * sink once, so the bench/verify session extracts once too.
+  /** Session artifacts: persisted tables, derived counts and coverage
+    * rows, each a pure function of a session-immutable input and so built
+    * once per (application, sfDir, name). A build may fetch other
+    * artifacts (d15 → simhash pairs → simhash fingerprints), so the memo
+    * is a reentrant monitor around a plain map: nested
+    * `ConcurrentHashMap.computeIfAbsent` calls on one map can throw
+    * "Recursive update". [[releaseCaches]] drops a session's entries.
     */
-  private val extractedCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.Dataset[graft.spark.ExtractedDoc]]()
+  private val artifacts = scala.collection.mutable.HashMap.empty[String, Any]
+  private def artifact[A](s: SparkSession, dir: String, name: String)(build: => A): A = {
+    val key = s.sparkContext.applicationId + "|" + dir + "|" + name
+    artifacts.synchronized {
+      artifacts.get(key) match {
+        case Some(a) => a.asInstanceOf[A]
+        case None =>
+          val a = build
+          artifacts.put(key, a)
+          a
+      }
+    }
+  }
+
+  /** The extracted corpus: x1/x2 consume the extraction OUTPUT table — in
+    * production they read the committed sink once, so the bench/verify
+    * session extracts once too.
+    */
   private def extractedDocs(s: SparkSession, dir: String): org.apache.spark.sql.Dataset[graft.spark.ExtractedDoc] =
-    extractedCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ => {
+    artifact(s, dir, "extracted") {
       implicit val sp: SparkSession = s
       graft.spark.Pipeline.extract(graft.spark.Corpus.generate(s, corpusSize(dir))).persist()
-    })
+    }
 
   /** Extraction smoke/verify surface: doc_id, status, metadata, span
     * stats per document. Rows-only check (extraction is not
@@ -297,15 +317,13 @@ object Queries {
       .orderBy($"doc_id")
   }
 
-  /** Session-scoped cache of the LSH candidate table: the shingle →
-    * signature → band → bucket-join stack is the expensive half of BOTH
-    * d7 and d8, and in production the candidate table is a reusable
-    * artifact (minted once, consumed by dedup decisions and by exact
-    * verification). Persisted so a bench/verify session computes it once.
+  /** The LSH candidate table: the shingle → signature → band →
+    * bucket-join stack is the expensive half of BOTH d7 and d8, and in
+    * production the candidate table is a reusable artifact (minted once,
+    * consumed by dedup decisions and by exact verification).
     */
-  private val lshCandCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def lshCandidates(s: SparkSession, dir: String): DataFrame =
-    lshCandCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ =>
+    artifact(s, dir, "lsh_candidates")(
       // the generic LSH layer orients pairs by STRING id compare; re-orient
       // numerically for the oracle ("27" < "7" lexicographically)
       graft.spark.Dedup.minhashLshPairs(t(s, dir, "documents"))
@@ -341,14 +359,13 @@ object Queries {
     * variant remains as [[graft.spark.Dedup.simhashDf]] with its own
     * JVM≡column parity spec.
     */
-  /** Session-scoped cache of the portable SimHash fingerprint table — the
-    * REUSABLE artifact shared by d9 (the fingerprint surface) and d11 (the
-    * banded near-dup search): in production it is minted once per corpus
-    * snapshot, same economics as the sign-LSH signature table.
+  /** The portable SimHash fingerprint table — the REUSABLE artifact
+    * shared by d9 (the fingerprint surface) and d11 (the banded near-dup
+    * search): in production it is minted once per corpus snapshot, same
+    * economics as the sign-LSH signature table.
     */
-  private val simhashCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def simhashSigs(s: SparkSession, dir: String): DataFrame =
-    simhashCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ =>
+    artifact(s, dir, "simhash")(
       graft.spark.Dedup.simhashPortableDf(t(s, dir, "documents")).persist())
 
   def d9_simhash(s: SparkSession, dir: String): DataFrame =
@@ -356,16 +373,13 @@ object Queries {
 
   private val d11Cap = 256
 
-  /** Session-scoped cache of the banded simhash near-dup PAIR table — the
-    * artifact d11 registers AND d15 clusters. d15 previously re-ran the
-    * whole band self-join + distinct over the cached fingerprints; in
-    * production the pair table is the persisted dedup-decision input, so
-    * the session computes it once too (same economics as
-    * [[lshCandidates]]).
+  /** The banded simhash near-dup PAIR table — the artifact d11 registers
+    * AND d15 clusters: in production the pair table is the persisted
+    * dedup-decision input, so the session computes it once too (same
+    * economics as [[lshCandidates]]).
     */
-  private val simhashPairsCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def simhashPairs(s: SparkSession, dir: String): DataFrame =
-    simhashPairsCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ =>
+    artifact(s, dir, "simhash_pairs")(
       graft.spark.Dedup.simhashPairsFromSigs(simhashSigs(s, dir), maxBucketSize = d11Cap)
         .persist())
 
@@ -394,12 +408,6 @@ object Queries {
     simhashPairs(s, dir).orderBy($"doc_a", $"doc_b")
   }
 
-  /** Session-scoped cache of the resolved duplicate clusters (the
-    * pair-graph fixpoint is iterative — computed once per corpus
-    * snapshot, like the signature tables).
-    */
-  private val clusterCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** Duplicate-cluster resolution: the d11 near-dup PAIRS resolved into
     * connected components with a canonical smallest-id keeper
     * ([[graft.spark.Dedup.dupClusters]] — min-label propagation to a
@@ -408,28 +416,22 @@ object Queries {
     * actionable dedup decision: `doc_id != cluster_id` ⇒ drop. The DuckDB
     * oracle replays the full chain — fingerprints → banding → cap →
     * pairs → a RECURSIVE transitive closure — so the check is
-    * rows+schema+hash.
+    * rows+schema+hash. The clustering is iterative, so it is a session
+    * artifact too.
     */
   def d15_dup_clusters(s: SparkSession, dir: String): DataFrame =
-    clusterCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ =>
-        graft.spark.Dedup.dupClusters(simhashPairs(s, dir)))
+    artifact(s, dir, "dup_clusters")(graft.spark.Dedup.dupClusters(simhashPairs(s, dir)))
       .orderBy($"doc_id")
 
-  /** Session-scoped memo of Coverage recordings: a coverage/balance report
-    * is a pure function of a session-immutable artifact (the persisted
-    * fingerprint/signature/index tables, or the driver's parquet corpus),
-    * so re-aggregating it on every execution of the consuming query buys
-    * no new information — the first execution records the row
-    * ([[graft.spark.Coverage]] keeps it queryable/persistable exactly as
-    * before), later executions in the same session reuse it.
+  /** A Coverage recording as a session artifact: a coverage/balance report
+    * is a pure function of a session-immutable input, so the first
+    * execution of the consuming query records the row
+    * ([[graft.spark.Coverage]] keeps it queryable/persistable) and later
+    * executions in the same session reuse it.
     */
-  private val coverageOnce =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]()
   private def recordOnce(s: SparkSession, dir: String, query: String,
       kind: String)(report: => DataFrame): org.apache.spark.sql.Row =
-    coverageOnce.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir + "|" + query + "|" + kind,
-      _ => graft.spark.Coverage.record(query, kind, report))
+    artifact(s, dir, s"coverage|$query|$kind")(graft.spark.Coverage.record(query, kind, report))
 
   /** Whitespace-token word array of a document — the shared tokenization
     * of the word-level ops (d12/d13), identical to d2's token split.
@@ -594,31 +596,24 @@ object Queries {
       .orderBy($"source")
   }
 
-  /** Session-scoped cache of the sign-LSH signature table over the
-    * embeddings corpus: the REUSABLE artifact shared by d10 (bucketed
-    * near-dup self-join) and e2 (precomputed ANN probes) — in production
-    * it's minted once per corpus snapshot and persisted beside it.
-    * Family: 16 tables × 8 bits (d10 sub-bands on the low 3 bits).
-    */
-  private val sigCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val sigCountCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   /** Stored signature width of the shared table — the ceiling for any
     * derived sub-banding width (sub-bands are low-bit prefixes).
     */
   private val embSigBits = 8
+  /** The sign-LSH signature table over the embeddings corpus: the
+    * REUSABLE artifact shared by d10 (bucketed near-dup self-join) and e2
+    * (precomputed ANN probes) — in production it's minted once per corpus
+    * snapshot and persisted beside it. Family: 16 tables × 8 bits (d10
+    * sub-bands on the low 3 bits).
+    */
   private def embSignatures(s: SparkSession, dir: String): DataFrame =
-    sigCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, key => {
-      val df = graft.spark.Ann.signatureTable(t(s, dir, "embeddings"),
-        nTables = 16, nBits = embSigBits).persist()
-      // materialize the shared artifact once and capture the corpus
-      // cardinality — the input to the scale-aware bucket-width derivation
-      sigCountCache.put(key, df.count())
-      df
-    })
-  private def embCount(s: SparkSession, dir: String): Long = {
-    embSignatures(s, dir)
-    sigCountCache.get(s.sparkContext.applicationId + "|" + dir).longValue()
-  }
+    artifact(s, dir, "signature_table")(graft.spark.Ann.signatureTable(
+      t(s, dir, "embeddings"), nTables = 16, nBits = embSigBits).persist())
+  /** Embeddings-corpus cardinality — the input to the scale-aware
+    * bucket-width derivation; counting materializes the signature table.
+    */
+  private def embCount(s: SparkSession, dir: String): Long =
+    artifact(s, dir, "emb_count")(embSignatures(s, dir).count())
 
   /** Sub-banding width for d10, DERIVED from the embeddings-corpus
     * cardinality (expected bucket occupancy ≤ 512, 8× headroom under the
@@ -706,24 +701,23 @@ object Queries {
       .orderBy($"query_id", $"rk")
   }
 
-  /** Session-scoped cache of the IVF (index, centroid-sidecar) pair over
-    * the embeddings corpus — the coarse-quantizer counterpart to the
-    * sign-LSH signature table: the deterministic k-means model is trained
-    * once per corpus snapshot ([[graft.spark.Ivf.kmeansModel]]), the index
-    * built and persisted, and the centroid table rides beside it the way
-    * the lineage sidecar rides beside the sink.
+  /** The IVF (index, centroid-sidecar) pair over the embeddings corpus —
+    * the coarse-quantizer counterpart to the sign-LSH signature table: the
+    * deterministic k-means model is trained once per corpus snapshot
+    * ([[graft.spark.Ivf.kmeansModel]]), the index built and persisted, and
+    * the centroid table rides beside it the way the lineage sidecar rides
+    * beside the sink.
     */
-  private val ivfCache = new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
   private val ivfLists = 16
   private val ivfProbe = 4
   private val ivfIters = 2
   private def embIvf(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    ivfCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ => {
+    artifact(s, dir, "ivf") {
       val emb = t(s, dir, "embeddings")
       val model = graft.spark.Ivf.kmeansModel(emb, nLists = ivfLists, iters = ivfIters)
       (graft.spark.Ivf.ivfIndex(emb, model).persist(),
         graft.spark.Ivf.centroidTable(s, model))
-    })
+    }
 
   /** IVF ANN top-k over the persisted inverted-file index: queries rank
     * the trained centroid set (deterministic k-means — hash-ordered
@@ -796,42 +790,25 @@ object Queries {
       .orderBy($"query_id", $"rk")
   }
 
-  /** Release every session-scoped persisted artifact for this Spark
-    * application (extracted corpus, LSH candidate table, signature table).
+  /** Drop every session artifact of this Spark application, unpersisting
+    * each Dataset it holds (also inside tuples, e.g. the IVF index) and
+    * the local checkpoint behind d15's fixpoint labels.
     * Verify/Bench call this when a sfDir's batch is done so persisted
     * datasets never outlive the batch in a long-lived driver.
     */
   def releaseCaches(s: SparkSession): Unit = {
     val prefix = s.sparkContext.applicationId + "|"
-    def drop[D <: org.apache.spark.sql.Dataset[_]](
-        m: java.util.concurrent.ConcurrentHashMap[String, D]): Unit = {
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey.startsWith(prefix)) {
-          e.getValue.unpersist()
-          it.remove()
-        }
-      }
+    def unpersist(a: Any): Unit = a match {
+      case d: org.apache.spark.sql.Dataset[_] =>
+        d.unpersist()
+        graft.spark.Dedup.unpersistCheckpoints(d)
+      case (x, y) => unpersist(x); unpersist(y)
+      case _ =>
     }
-    drop(extractedCache)
-    drop(lshCandCache)
-    drop(sigCache)
-    drop(simhashCache)
-    drop(simhashPairsCache)
-    drop(clusterCache)
-    locally {
-      val it = ivfCache.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey.startsWith(prefix)) {
-          e.getValue._1.unpersist() // the centroid table (_2) is a local relation
-          it.remove()
-        }
-      }
+    artifacts.synchronized {
+      artifacts.keys.filter(_.startsWith(prefix)).toList
+        .foreach(key => artifacts.remove(key).foreach(unpersist))
     }
-    sigCountCache.keySet().removeIf(_.startsWith(prefix))
-    coverageOnce.keySet().removeIf(_.startsWith(prefix))
   }
 
   // ------------------------------------------------------------ registry

@@ -710,9 +710,14 @@ object Dedup {
     // path below runs unchanged (spec-covered either way).
     val longIds = edges.schema.fields.forall(_.dataType ==
       org.apache.spark.sql.types.LongType)
-    // (long-id graphs only — the generic-typed iterative path below serves
-    // anything else; every pair emitter in this engine uses long ids)
-    if (longIds && edges.count() <= maxDriverPairs) {
+    // (long-id, null-free graphs only — the generic iterative path below
+    // serves anything else; every pair emitter in this engine uses non-null
+    // long ids. The edge list is symmetric, so a null dst is a null src too.)
+    val driverSized = longIds && {
+      val r = edges.agg(count(lit(1)), count(when(col("src").isNull, 1))).head()
+      r.getLong(0) <= maxDriverPairs && r.getLong(1) == 0
+    }
+    if (driverSized) {
       val spark = pairs.sparkSession
       import spark.implicits._
       val parent = new java.util.HashMap[Long, Long]()
@@ -732,6 +737,7 @@ object Dedup {
           // min-id union keeps every root the smallest id of its component
           if (ra < rb) parent.put(rb, ra) else if (rb < ra) parent.put(ra, rb)
       }
+      unpersistCheckpoints(edges)
       val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
       val it = parent.keySet().iterator()
       while (it.hasNext) { val v = it.next(); out += ((v, find(v))) }
@@ -768,15 +774,29 @@ object Dedup {
         .agg(min(col("nbr_label")).as("label"))
         .localCheckpoint()
       val nextSum = labelSum(next)
-      labels.unpersist()
+      unpersistCheckpoints(labels)
       labels = next
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
       it += 1
     }
+    // the checkpointed labels no longer read the edges
+    unpersistCheckpoints(edges)
     if (!converged)
       sys.error(s"dupClusters: not converged after $maxIters iterations — " +
         "pair graph has pathological diameter; raise maxIters explicitly")
     labels.withColumnRenamed("label", "cluster_id")
   }
+
+  /** Frees the blocks of every eager `localCheckpoint()` in `df`'s plan,
+    * such as [[dupClusters]]' fixpoint labels. `Dataset.unpersist` only
+    * drops cache-manager entries, and a local checkpoint is a persisted
+    * RDD the cache manager never sees. A read of `df` after the call
+    * fails, so call it only once nothing reads `df` again.
+    */
+  def unpersistCheckpoints(df: org.apache.spark.sql.Dataset[_]): Unit =
+    df.queryExecution.analyzed.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+      case _ =>
+    }
 }

@@ -212,8 +212,13 @@ object Ivf {
             val sq = new Array[Long](dims)
             var n = 0L
             rows.foreach { case (_, qs, cnt) =>
+              // each partition checks its own vectors; this catches dims
+              // that differ BETWEEN partitions (or from the seed centroid)
+              require(qs.length == dims,
+                s"Ivf.kmeansModel: mixed vector dims in list ${c.listId} " +
+                  s"($dims vs ${qs.length}) — corpus violates the uniform-dims contract")
               var i = 0
-              while (i < dims && i < qs.length) { sq(i) += qs(i); i += 1 }
+              while (i < dims) { sq(i) += qs(i); i += 1 }
               n += cnt
             }
             val nv = new Array[Double](dims)

@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One media object: payload as an opaque binary column + typed metadata
@@ -141,12 +141,4 @@ object Multimodal {
       }
     }
   }
-
-  /** Exact media dedup across docs by payload hash. */
-  def dedupByContent(features: Dataset[MediaFeatures]): DataFrame =
-    features.groupBy(col("content_hash"))
-      .agg(
-        count(lit(1)).as("n_copies"),
-        min(col("media_ref")).as("canonical_ref"))
-      .filter(col("n_copies") > 1)
 }

@@ -6,39 +6,31 @@ import org.apache.spark.sql.functions._
 /** Distributed extraction skeleton (SURVEY.md §2.0):
   *
   * {{{
-  * scan → salted repartition (skew-aware) → mapPartitions(extract) → sink
-  *                                        ↘ per-partition lineage/metrics
+  * scan → mapPartitions(assemble + extract, oversize gate) → sink
+  *                                                        ↘ lineage sidecar
   * }}}
   *
-  * Everything is Dataset/DataFrame API; the per-doc pipeline is a typed
-  * mapPartitions (SURVEY.md §7.3: no UDF — one object pipeline per task,
-  * no Row↔case-class churn, metrics for free). Catalyst prunes the scan to
-  * (doc_id, spans); the only shuffle is the explicit salt.
+  * Catalyst prunes the scan to (doc_id, spans); the per-doc pipeline runs
+  * inside one mapPartitions over the scan's rows (SURVEY.md §7.3: no UDF —
+  * one object pipeline per task), so extraction adds no shuffle.
   *
   * Scale design notes (100 TB / 10^12 docs):
-  *   - salt = pmod(xxhash64(doc_id), S) with S ≈ 2–4× total cores spreads
-  *     hash-skew; doc cost is ~linear in span bytes, so additionally the
-  *     oversize tail (> oversizeBytes of span payload) is routed to
-  *     dedicated salts so one 8 MB page never serializes behind thousands
-  *     of small ones (north-rule skew requirement).
+  *   - doc cost is ~linear in span bytes; the rare giant pages (more than
+  *     `oversizeSpans` spans) pass a per-executor gate that bounds how many
+  *     are in flight per JVM, so one 8 MB page never floods the heap that
+  *     thousands of small docs share (north-rule skew requirement).
   *   - map-side work dominates; AQE coalescing applies to the metrics aggs.
-  *   - per-partition lineage rows make restarts resumable via anti-join
-  *     (see [[Lineage.resumeFilter]]).
+  *   - lineage rows per resume bucket make restarts resumable (see
+  *     [[Lineage.resumeFilter]]).
   */
 object Pipeline {
 
   final case class Config(
       baseUrl: String = "https://corpus.example/doc.html",
       charThreshold: Int = 500,
-      nSalts: Int = 128,
-      /** html-char threshold above which a doc is treated as oversize
-        * (salted-shuffle strategy only)
-        */
-      oversizeBytes: Int = 1 << 20,
-      /** span-count threshold for the scan-aligned oversize split: cheap
-        * codegen'd `size(spans)` proxy for document work (~linear in
-        * spans for interleaved corpora), evaluated before any typed
-        * deserialization so each row is assembled exactly once
+      /** span count above which a doc is oversize (gated, see
+        * [[extractGated]]): a cheap proxy for document work (~linear in
+        * spans for interleaved corpora), read before the doc is assembled
         */
       oversizeSpans: Int = 256,
       /** hard cap: skip docs above this many HTML chars (0 = off) */
@@ -48,9 +40,7 @@ object Pipeline {
         * snapshot + clone), so unbounded concurrency turns into GC
         * pressure that stalls the small-doc tasks too
         */
-      oversizePartitions: Int = 16,
-      /** full salted shuffle instead of scan-aligned + oversize split */
-      saltedShuffle: Boolean = false)
+      oversizePartitions: Int = 16)
 
   /** Observability for the skew path: how many docs took the oversize
     * route and how long they waited on the per-executor gate. Spark
@@ -63,7 +53,7 @@ object Pipeline {
       nOversize: org.apache.spark.util.LongAccumulator,
       gateWaitMs: org.apache.spark.util.LongAccumulator)
 
-  /** Extraction plan (scan-aligned by default):
+  /** Extraction plan:
     *
     *   - ONE scan of the corpus, map-only — no shuffle, no second pass
     *   - spans→html assembly happens below the row abstraction (single
@@ -90,91 +80,65 @@ object Pipeline {
     val stats = ExtractStats(
       spark.sparkContext.longAccumulator("graft.extract.oversize_docs"),
       spark.sparkContext.longAccumulator("graft.extract.gate_wait_ms"))
-
-    /** Decode + assemble + extract in one pass over the scan's InternalRows:
-      * span text bytes are appended to ONE UTF-8 buffer and decoded to a
-      * String once per document. The product-encoder path materialized a
-      * SpanIn case class + String per span before concatenating — measured
-      * as ~half the 32-core pipeline cost (the extraction itself being the
-      * other half). This is the documented mapPartitions-as-last-resort
-      * case: per-partition imperative logic below the row abstraction; the
-      * plan above it (scan, pruning, split) stays Catalyst.
-      */
-    def run(ds: Dataset[Doc]): Dataset[ExtractedDoc] = {
-      val df = ds.toDF().select(col("doc_id"), col("spans"))
-      val spanType = df.schema("spans").dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType]
-        .elementType.asInstanceOf[org.apache.spark.sql.types.StructType]
-      val kindIdx = spanType.fieldIndex("kind")
-      val textIdx = spanType.fieldIndex("text")
-      val refIdx = spanType.fieldIndex("media_ref")
-      val offIdx = spanType.fieldIndex("offset")
-      val nFields = spanType.length
-      val oversizeSpans = cfg.oversizeSpans
-      val oversizePermits = cfg.oversizePartitions
-      val rdd = df.queryExecution.toRdd.mapPartitions { it =>
-        it.map { row =>
-          // null ids flow through as null (poison-row discipline: a bad
-          // row must never NPE a task)
-          val idU = row.getUTF8String(0)
-          val docId = if (idU == null) null else idU.toString
-          val arr = row.getArray(1)
-          val big = arr.numElements() > oversizeSpans
-          def go(): ExtractedDoc = {
-            // sound early skip BEFORE assembling a giant buffer: UTF-16
-            // length ≥ utf8Bytes/3, so bytes > 3×charLimit guarantees the
-            // post-assembly char check would skip too
-            if (cfg.maxHtmlChars > 0 && big) {
-              val bytes = Spans.spanTextBytes(arr, nFields, textIdx)
-              if (bytes > 3L * cfg.maxHtmlChars)
-                return Spans.oversizeSkipped(docId, s"span_text_bytes=$bytes")
-            }
-            val html = Spans.assembleHtmlFromRow(arr, nFields,
-              kindIdx, textIdx, refIdx, offIdx)
-            Spans.extractFromHtml(docId, html, cfg.baseUrl, opts, cfg.maxHtmlChars)
-          }
-          if (!big) go()
-          else {
-            // explicit skew handling WITHOUT a second corpus scan or a
-            // shuffle: oversize docs (~0.1%, but each a multi-hundred-MB
-            // working set) are throttled by a per-executor gate so at most
-            // `oversizePartitions` giants are in flight per JVM — the
-            // earlier filter/union design paid a full second scan of the
-            // corpus for the same bound
-            stats.nOversize.add(1)
-            val gate = Pipeline.oversizeGate(oversizePermits)
-            val t0 = System.nanoTime()
-            gate.acquire()
-            stats.gateWaitMs.add((System.nanoTime() - t0) / 1000000L)
-            try go() finally gate.release()
-          }
-        }
+    // Decode + assemble + extract in one pass over the scan's InternalRows:
+    // span text bytes are appended to ONE UTF-8 buffer and decoded to a
+    // String once per document. The product-encoder path materialized a
+    // SpanIn case class + String per span before concatenating — measured
+    // as ~half the 32-core pipeline cost (the extraction itself being the
+    // other half). This is the documented mapPartitions-as-last-resort
+    // case: per-partition imperative logic below the row abstraction; the
+    // plan above it (scan, pruning) stays Catalyst.
+    val df = docs.toDF().select(col("doc_id"), col("spans"))
+    val spanType = df.schema("spans").dataType
+      .asInstanceOf[org.apache.spark.sql.types.ArrayType]
+      .elementType.asInstanceOf[org.apache.spark.sql.types.StructType]
+    val kindIdx = spanType.fieldIndex("kind")
+    val textIdx = spanType.fieldIndex("text")
+    val refIdx = spanType.fieldIndex("media_ref")
+    val offIdx = spanType.fieldIndex("offset")
+    val nFields = spanType.length
+    val gateStats = Some(stats)
+    val rdd = df.queryExecution.toRdd.mapPartitions { it =>
+      it.map { row =>
+        // null ids flow through as null (poison-row discipline: a bad
+        // row must never NPE a task)
+        val idU = row.getUTF8String(0)
+        val docId = if (idU == null) null else idU.toString
+        val arr = row.getArray(1)
+        extractGated(docId, arr.numElements(), Spans.spanTextBytes(arr, nFields, textIdx),
+          Spans.assembleHtmlFromRow(arr, nFields, kindIdx, textIdx, refIdx, offIdx),
+          cfg, opts, gateStats)
       }
-      spark.createDataset(rdd)
     }
+    (spark.createDataset(rdd), stats)
+  }
 
-    if (cfg.saltedShuffle) {
-      val prepared: Dataset[(String, String)] =
-        docs.map(d => (d.doc_id, Spans.assembleHtml(d.spans)))
-      val oversizeSalts = math.max(cfg.nSalts / 8, 4)
-      val salted = prepared
-        .withColumn("salt",
-          when(length(col("_2")) > cfg.oversizeBytes,
-            lit(cfg.nSalts) + pmod(xxhash64(col("_1")), lit(oversizeSalts)))
-            .otherwise(pmod(xxhash64(col("_1")), lit(cfg.nSalts))))
-        .repartition(col("salt"))
-        .select(col("_1"), col("_2")).as[(String, String)]
-      val ds = salted.mapPartitions { it =>
-        it.map { case (id, html) =>
-          if (html != null && html.length > cfg.oversizeBytes) stats.nOversize.add(1)
-          Spans.extractFromHtml(id, html, cfg.baseUrl, opts, cfg.maxHtmlChars)
-        }
-      }
-      (ds, stats)
-    } else {
-      // single scan, map-only; oversize docs are gated inside the map
-      (run(docs), stats)
+  /** One doc's extraction under the oversize policy, shared by the batch
+    * and streaming loops. A doc with more than `oversizeSpans` spans is
+    * oversize: it is skipped BEFORE its giant buffer is assembled when
+    * its span text exceeds 3 × `maxHtmlChars` UTF-8 bytes (UTF-16 length
+    * ≥ utf8Bytes/3, so the post-assembly char check would skip it too);
+    * otherwise it waits on the per-executor gate, so at most
+    * `oversizePartitions` giants (~0.1% of docs, each a multi-hundred-MB
+    * working set) are in flight per JVM — skew handling without a second
+    * corpus scan or a shuffle. `textBytes` and `html` are evaluated only
+    * when needed.
+    */
+  private def extractGated(docId: String, nSpans: Int, textBytes: => Long, html: => String,
+      cfg: Config, opts: graft.algo.Options, stats: Option[ExtractStats]): ExtractedDoc = {
+    def go(): ExtractedDoc = Spans.extractFromHtml(docId, html, cfg.baseUrl, opts, cfg.maxHtmlChars)
+    if (nSpans <= cfg.oversizeSpans) return go()
+    stats.foreach(_.nOversize.add(1))
+    if (cfg.maxHtmlChars > 0) {
+      val bytes = textBytes
+      if (bytes > 3L * cfg.maxHtmlChars)
+        return Spans.oversizeSkipped(docId, s"span_text_bytes=$bytes")
     }
+    val gate = oversizeGate(cfg.oversizePartitions)
+    val t0 = System.nanoTime()
+    gate.acquire()
+    stats.foreach(_.gateWaitMs.add((System.nanoTime() - t0) / 1000000L))
+    try go() finally gate.release()
   }
 
   /** Structured Streaming twin of [[extract]] — IDENTICAL per-doc
@@ -182,9 +146,9 @@ object Pipeline {
     * `extractStreaming` → `writeStream` sink. A streaming Dataset has no
     * `queryExecution.toRdd` handle (the plan is incremental), so this path
     * assembles through the typed layer instead of the batch path's
-    * InternalRow hot loop; the per-executor oversize gate applies inside
-    * each micro-batch exactly as in batch. Equality with the batch result
-    * on the same docs is asserted in OpsSpec.
+    * InternalRow hot loop; both loops make the per-doc oversize decision
+    * in [[extractGated]]. Equality with the batch result on the same docs,
+    * oversize skips included, is asserted in OpsSpec.
     */
   def extractStreaming(docs: Dataset[Doc], cfg: Config = Config())(
       implicit spark: SparkSession): Dataset[ExtractedDoc] = {
@@ -193,15 +157,8 @@ object Pipeline {
     docs.mapPartitions { it =>
       it.map { d =>
         val spans = if (d.spans == null) Nil else d.spans
-        val big = spans.length > cfg.oversizeSpans
-        def go(): ExtractedDoc = Spans.extractFromHtml(d.doc_id,
-          Spans.assembleHtml(spans), cfg.baseUrl, opts, cfg.maxHtmlChars)
-        if (!big) go()
-        else {
-          val gate = Pipeline.oversizeGate(cfg.oversizePartitions)
-          gate.acquire()
-          try go() finally gate.release()
-        }
+        extractGated(d.doc_id, spans.length, Spans.spanTextBytes(spans),
+          Spans.assembleHtml(spans), cfg, opts, None)
       }
     }
   }

@@ -86,6 +86,11 @@ object Spans {
     total
   }
 
+  /** [[spanTextBytes]] over typed spans (the streaming path). */
+  def spanTextBytes(spans: Seq[SpanIn]): Long =
+    spans.iterator.map(s => if (s.text == null) 0L
+      else org.apache.spark.unsafe.types.UTF8String.fromString(s.text).numBytes.toLong).sum
+
   /** Oversize-skip result row (shared by the pre- and post-assembly guards). */
   def oversizeSkipped(docId: String, detail: String): ExtractedDoc =
     ExtractedDoc(docId, Nil, null, null, null, null, null, null, null,
@@ -207,13 +212,10 @@ object Spans {
     out.result()
   }
 
-  /** Run the full extraction on one doc. Never throws — poison rows yield
-    * status/error columns (a bad row must not kill a 10^12-doc job).
+  /** Run the full extraction on one doc's assembled HTML. Never throws —
+    * poison rows yield status/error columns (a bad row must not kill a
+    * 10^12-doc job).
     */
-  def extractOne(doc: Doc, baseUrl: String, opts: graft.algo.Options,
-      maxHtmlBytes: Int = 0): ExtractedDoc =
-    extractFromHtml(doc.doc_id, assembleHtml(doc.spans), baseUrl, opts, maxHtmlBytes)
-
   def extractFromHtml(docId: String, html: String, baseUrl: String,
       opts: graft.algo.Options, maxHtmlBytes: Int = 0): ExtractedDoc = {
     val doc = Doc(docId, Nil) // id carrier for error paths

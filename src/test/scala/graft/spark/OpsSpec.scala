@@ -607,6 +607,17 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"unexpected failure: ${messages(e2).take(300)}")
   }
 
+  test("ivf: k-means fails loudly on vector dims that differ between partitions") {
+    val s = spark
+    import s.implicits._
+    // each partition is uniform on its own, so only the driver merge of
+    // the per-partition sums can see the mismatch
+    val vecs = s.sparkContext.parallelize((0 until 16).map(i =>
+      (i.toLong, Seq.fill(if (i < 8) 4 else 3)(1.0f + i))), numSlices = 2).toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](Ivf.kmeansModel(vecs, nLists = 1, iters = 1))
+    assert(e.getMessage.contains("mixed vector dims"), e.getMessage)
+  }
+
   test("ann: all-pairs baseline fails fast past its size guard") {
     val s = spark
     import s.implicits._
@@ -636,13 +647,23 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("releaseCaches unpersists every session-scoped artifact") {
     val s = spark
-    import s.implicits._
-    // touch the shared signature-table cache through a registered query
-    graft.Queries.all("e2_cosine_lsh")(s, "/root/testdata/sf0.001").count()
+    // the committed sf0.01 tables of the benchmark
+    val dir = "perfbench/data/sf0.01"
+    def rows(q: String): Long = graft.Queries.all(q)(s, dir).count()
+    def persisted = s.sparkContext.getPersistentRDDs.values.map(_.toString).mkString(", ")
+    // every artifact: the extracted corpus (x1), LSH candidates (d7),
+    // simhash fingerprints, pairs and clusters (d9, d11, d15), the
+    // signature table and its count (d10, e2), the IVF index (e3)
+    val before = Seq("x1_extract", "d7_minhash_lsh_pairs", "d9_simhash", "d11_simhash_pairs",
+      "d15_dup_clusters", "d10_embed_dup", "e2_cosine_lsh", "e3_cosine_ivf").map(q => q -> rows(q)).toMap
     assert(s.sparkContext.getPersistentRDDs.nonEmpty)
     graft.Queries.releaseCaches(s)
-    assert(s.sparkContext.getPersistentRDDs.isEmpty,
-      s.sparkContext.getPersistentRDDs.values.map(_.name).mkString(", "))
+    assert(s.sparkContext.getPersistentRDDs.isEmpty, persisted)
+    // a query after the release rebuilds its artifacts, same rows
+    assert(rows("d15_dup_clusters") == before("d15_dup_clusters"))
+    assert(s.sparkContext.getPersistentRDDs.nonEmpty, "d15 did not rebuild its simhash artifacts")
+    graft.Queries.releaseCaches(s)
+    assert(s.sparkContext.getPersistentRDDs.isEmpty, persisted)
   }
 
   test("coverage registry: capped operators record queryable rows; degradation flips status") {
@@ -696,14 +717,29 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(chainGot == (0L to 9L).map(_ -> 0L).toMap, chainGot.toString)
     // empty pair set → empty clustering (singletons are implicit)
     assert(Dedup.dupClusters(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")).count() == 0)
+    // a null id is one more node: it labels no neighbour and takes the
+    // min label of its non-null neighbours
+    val withNull = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)), (Some(2L), Some(3L)),
+      (None, Some(3L)), (Some(10L), None), (None, None)).toDF("doc_a", "doc_b")
+    def labels(df: org.apache.spark.sql.DataFrame): Set[(Option[Any], Option[Any])] =
+      df.collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
+    assert(labels(Dedup.dupClusters(withNull)) == Set[(Option[Any], Option[Any])](
+      (Some(1L), Some(1L)), (Some(2L), Some(1L)), (Some(3L), Some(1L)), (Some(10L), Some(10L)),
+      (None, Some(1L))))
     // the distributed fixpoint (maxDriverPairs = 0 forces it) agrees with
-    // the driver union-find fast path on both shapes
-    for (p <- Seq(pairs, chain)) {
-      val fast = Dedup.dupClusters(p).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = Dedup.dupClusters(p, maxDriverPairs = 0).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the driver union-find fast path on every shape; of the fixpoint's
+    // local checkpoints only its result outlives the call, and
+    // unpersistCheckpoints frees that one
+    def persisted = s.sparkContext.getPersistentRDDs.keySet
+    for (p <- Seq(pairs, chain, withNull)) {
+      val fast = labels(Dedup.dupClusters(p))
+      val before = persisted
+      val distDf = Dedup.dupClusters(p, maxDriverPairs = 0)
+      assert((persisted -- before).size == 1, s"${persisted -- before}")
+      val dist = labels(distDf)
       assert(fast == dist, s"fast=$fast dist=$dist")
+      Dedup.unpersistCheckpoints(distDf)
+      assert((persisted -- before).isEmpty)
     }
     // the safety valve throws rather than returning a half-converged
     // labeling (distributed path — the fast path needs no iterations)
@@ -861,11 +897,23 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val docs = Corpus.generate(spark, 10, nPartitions = 2).collect()
-    val batch = Pipeline.extract(Corpus.generate(spark, 10, nPartitions = 2))
-      .collect().map(d => d.doc_id -> (d.status, d.title, d.spans)).toMap
+    // limits small enough that three giants take each oversize outcome:
+    // skipped before assembly (span text over 3 × maxHtmlChars bytes),
+    // skipped after assembly (html over maxHtmlChars), gated and extracted
+    val cfg = Pipeline.Config(maxHtmlChars = 60000, oversizeSpans = 64)
+    def giant(id: String, nSpans: Int, para: String) =
+      Doc(id, (0 until nSpans).map(i => SpanIn("text", s"<p>$para</p>", null, i)))
+    val docs = Corpus.generate(spark, 10, nPartitions = 2).collect().toSeq ++ Seq(
+      giant("giant-pre-skip", 300, "x" * 1000),
+      giant("giant-post-skip", 100, "y" * 1000),
+      giant("giant-gated", 80, "A gated paragraph, with commas, long enough to be scored as content."))
+    val batch = Pipeline.extract(docs.toDS(), cfg).collect().sortBy(_.doc_id).toSeq
+    val errors = batch.map(d => d.doc_id -> String.valueOf(d.error)).toMap
+    assert(errors("giant-pre-skip").startsWith("span_text_bytes="), errors)
+    assert(errors("giant-post-skip").startsWith("html_chars="), errors)
+    assert(batch.find(_.doc_id == "giant-gated").exists(_.status != "oversize_skipped"))
     val mem = MemoryStream[Doc]
-    val q = Pipeline.extractStreaming(mem.toDS())
+    val q = Pipeline.extractStreaming(mem.toDS(), cfg)
       .writeStream.format("memory").queryName("x_stream")
       .outputMode("append").start()
     mem.addData(docs.take(4): _*)
@@ -873,11 +921,12 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(s.sql("select * from x_stream").count() == 4)
     mem.addData(docs.drop(4): _*) // second micro-batch: incremental
     q.processAllAvailable()
-    val streamed = s.table("x_stream").as[ExtractedDoc].collect()
-      .map(d => d.doc_id -> (d.status, d.title, d.spans)).toMap
+    val streamed = s.table("x_stream").as[ExtractedDoc].collect().sortBy(_.doc_id).toSeq
     q.stop()
-    assert(streamed.keySet == batch.keySet)
-    assert(streamed == batch, "streaming extraction diverged from the batch pipeline")
+    assert(streamed.map(_.doc_id) == batch.map(_.doc_id))
+    val diverged = streamed.zip(batch).filter { case (a, b) => a != b }
+    assert(diverged.isEmpty, "streaming extraction diverged from the batch pipeline: " +
+      diverged.map { case (a, b) => s"${a.doc_id}: ${a.status}/${a.error} vs ${b.status}/${b.error}" }.mkString("; "))
   }
 
   test("streaming: stateful sessionization closes sessions after gap") {
@@ -908,7 +957,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val docs = Corpus.generate(spark, 30, nPartitions = 2)
-    val extracted = Pipeline.extract(docs, Pipeline.Config(nSalts = 4))
+    val extracted = Pipeline.extract(docs, Pipeline.Config())
     val media = Multimodal.mediaTable(extracted)
     val features = Multimodal.extractFeatures(media).collect()
     assert(features.nonEmpty)
